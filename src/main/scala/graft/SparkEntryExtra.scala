@@ -49,7 +49,7 @@ private[graft] object SparkEntryExtra {
   // testdata corpus (16 planes -> 65k buckets = singletons at 500 vectors)
   private def bucketDuck8 = (0 until 8).map(bitDuck).mkString(" + ")
   /** XOR masks of the probe sequence: self, Hamming-1, Hamming-2 (37). */
-  private val ProbeMasks: Seq[Int] =
+  private[graft] val ProbeMasks: Seq[Int] =
     0 +: ((0 until 8).map(1 << _) ++
       (for (i <- 0 until 8; j <- (i + 1) until 8) yield (1 << i) | (1 << j)))
 
@@ -98,6 +98,43 @@ private[graft] object SparkEntryExtra {
     }
     bucket
   }
+
+  /** The vec_id = 0 query vector of an ANN query, if the table has one. */
+  private def queryVector(embeddings: DataFrame): Option[Array[Float]] = {
+    import embeddings.sparkSession.implicits._
+    embeddings.where(col("vec_id") === 0).select("embedding")
+      .as[Array[Float]].head(1).headOption
+  }
+
+  /** The (vec_id, cos) result of an ANN query without a query vector:
+    * empty, as the SQL form's CROSS JOIN with the missing query row is.
+    */
+  private def noAnnHits(embeddings: DataFrame): DataFrame =
+    embeddings.where(lit(false))
+      .select(col("vec_id"), lit(null).cast("double").as("cos"))
+
+  /** `dot / normProduct` as the SQL forms compute a cosine: NULL when the
+    * norm product is 0 (a zero-norm vector; DuckDB's x / 0 is NULL), NaN
+    * when a component is NaN.
+    */
+  private def cosOrNull(dot: Double, normProduct: Double): java.lang.Double =
+    if (normProduct == 0.0) null else dot / normProduct
+
+  /** SQL `ORDER BY sim DESC, cid` over (cid, sim): NaN ranks greatest,
+    * -0.0 equals 0.0, NULL ranks last (DESC NULLS LAST), and equal sims
+    * keep the lower cid first.
+    */
+  private[graft] val bySimDesc: Ordering[(Int, java.lang.Double)] =
+    new Ordering[(Int, java.lang.Double)] {
+      def compare(a: (Int, java.lang.Double), b: (Int, java.lang.Double)): Int = {
+        val c =
+          if (a._2 == null || b._2 == null)
+            java.lang.Boolean.compare(a._2 == null, b._2 == null)
+          else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(b._2, a._2)
+        if (c != 0) c else Integer.compare(a._1, b._1)
+      }
+    }
 
   private[graft] def registerVecUdfs(spark: SparkSession): Unit = {
     spark.udf.register("graft_vdot",
@@ -217,6 +254,30 @@ private[graft] object SparkEntryExtra {
                       (spark: SparkSession, dir: String): DataFrame = {
     views(spark, dir, tables: _*)
     spark.sql(sparkSql)
+  }
+
+  /** IVF-flat probe over `cemb` (vec_id, embedding) with the collected
+    * codebook `cents` (cid, embedding): each vector joins its nearest
+    * centroid's cell, the vec_id = 0 query probes its `nprobe` nearest
+    * cells, top-5 (vec_id, cos) by cosine to the query.
+    */
+  private[graft] def annIvf(cemb: DataFrame, cents: Array[(Int, Array[Float])],
+                            nprobe: Int): DataFrame = {
+    def simsTo(e: Array[Float]): Array[(Int, java.lang.Double)] =
+      cents.map { case (cid, ce) => (cid, cosOrNull(vdot(e, ce), vnorm(e) * vnorm(ce))) }
+    queryVector(cemb).fold(noAnnHits(cemb)) { qe =>
+      val probes = simsTo(qe).sorted(bySimDesc).take(nprobe).map(_._1).toSet
+      val asgUdf = udf((e: Array[Float]) =>
+        simsTo(e).minOption(bySimDesc).fold(-1)(_._1))
+      val cosUdf = udf((e: Array[Float]) => cosOrNull(vdot(e, qe), vnorm(e) * vnorm(qe)))
+      cemb
+        .where(col("vec_id") =!= 0)
+        .withColumn("cid", asgUdf(col("embedding")))
+        .where(col("cid").isin(probes.toSeq: _*))
+        .select(col("vec_id"), round(cosUdf(col("embedding")), 4).as("cos"))
+        .orderBy(desc("cos"), asc("vec_id"))
+        .limit(5)
+    }
   }
 
   def extraQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -466,22 +527,23 @@ private[graft] object SparkEntryExtra {
     // instead of a second scan, a cross join and a broadcast build. Per-
     // pair arithmetic unchanged: dot / (norm_s * norm_q) with the same
     // index-order double sums (norm_q is a deterministic value whether
-    // computed per row or once).
+    // computed per row or once), NULL for a zero norm (cosOrNull). Without
+    // a vec_id = 0 row the result is empty, as the CROSS JOIN's is.
     "q_ann_lsh" -> ((spark: SparkSession, dir: String) => {
-      import spark.implicits._
       views(spark, dir, "embeddings")
-      val qe = spark.table("embeddings").where(col("vec_id") === 0)
-        .select("embedding").as[Array[Float]].head()
-      val qb = lshBucketOf(qe, 16)
-      val qn = vnorm(qe)
-      val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 16))
-      val cosU = udf((a: Array[Float]) => vdot(a, qe) / (vnorm(a) * qn))
-      spark.table("embeddings")
-        .where(col("vec_id") =!= 0)
-        .where(bucketU(col("embedding")) === qb)
-        .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
-        .orderBy(desc("cos"), asc("vec_id"))
-        .limit(5)
+      val emb = spark.table("embeddings")
+      queryVector(emb).fold(noAnnHits(emb)) { qe =>
+        val qb = lshBucketOf(qe, 16)
+        val qn = vnorm(qe)
+        val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 16))
+        val cosU = udf((a: Array[Float]) => cosOrNull(vdot(a, qe), vnorm(a) * qn))
+        emb
+          .where(col("vec_id") =!= 0)
+          .where(bucketU(col("embedding")) === qb)
+          .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
+          .orderBy(desc("cos"), asc("vec_id"))
+          .limit(5)
+      }
     }),
 
     // multi-probe variant: 8-plane buckets, probing the query bucket plus
@@ -494,21 +556,21 @@ private[graft] object SparkEntryExtra {
     // same driver-side query-vector shape as q_ann_lsh, with the probe set
     // (self + Hamming-1/2 neighbors of the 8-plane bucket) expanded once
     "q_ann_multiprobe" -> ((spark: SparkSession, dir: String) => {
-      import spark.implicits._
       views(spark, dir, "embeddings")
-      val qe = spark.table("embeddings").where(col("vec_id") === 0)
-        .select("embedding").as[Array[Float]].head()
-      val qb = lshBucketOf(qe, 8)
-      val qn = vnorm(qe)
-      val probes = ProbeMasks.map(qb ^ _)
-      val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 8))
-      val cosU = udf((a: Array[Float]) => vdot(a, qe) / (vnorm(a) * qn))
-      spark.table("embeddings")
-        .where(col("vec_id") =!= 0)
-        .where(bucketU(col("embedding")).isin(probes: _*))
-        .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
-        .orderBy(desc("cos"), asc("vec_id"))
-        .limit(5)
+      val emb = spark.table("embeddings")
+      queryVector(emb).fold(noAnnHits(emb)) { qe =>
+        val qb = lshBucketOf(qe, 8)
+        val qn = vnorm(qe)
+        val probes = ProbeMasks.map(qb ^ _)
+        val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 8))
+        val cosU = udf((a: Array[Float]) => cosOrNull(vdot(a, qe), vnorm(a) * qn))
+        emb
+          .where(col("vec_id") =!= 0)
+          .where(bucketU(col("embedding")).isin(probes: _*))
+          .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
+          .orderBy(desc("cos"), asc("vec_id"))
+          .limit(5)
+      }
     }),
 
     // --- ANN recall, not just mechanics: recall@5 of the 8-plane
@@ -566,40 +628,12 @@ private[graft] object SparkEntryExtra {
       // row_number window, and the rk CTE was re-expanded for probes —
       // the whole sims/window subtree executed twice. Per-pair float ops
       // are unchanged (dot / (norm_e * norm_c), doubles in index order);
-      // nearest = max sim with ties to the LOWER cid, identical to
-      // row_number() ORDER BY sim DESC, cid.
+      // nearest = the first sim under row_number() ORDER BY sim DESC, cid
+      // (bySimDesc).
       val cents = spark.table("ivf_cent")
         .select(col("cid"), col("embedding"))
-        .as[(Int, Array[Float])].collect().sortBy(_._1)
-      def dot(a: Array[Float], b: Array[Float]): Double = {
-        var s = 0.0
-        var i = 0
-        while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-        s
-      }
-      def nrm(a: Array[Float]): Double = math.sqrt(dot(a, a))
-      def simsTo(e: Array[Float]): Array[(Int, Double)] =
-        cents.map { case (cid, ce) => (cid, dot(e, ce) / (nrm(e) * nrm(ce))) }
-      def nearest(e: Array[Float]): Int = {
-        // ascending cid order + strict > keeps the lower cid on sim ties
-        var bestCid = -1
-        var bestSim = Double.NegativeInfinity
-        for ((cid, sim) <- simsTo(e)) if (sim > bestSim) { bestSim = sim; bestCid = cid }
-        bestCid
-      }
-      val qe = spark.sql("SELECT embedding FROM cemb WHERE vec_id = 0")
-        .as[Array[Float]].head()
-      val probes = simsTo(qe).sortBy { case (cid, sim) => (-sim, cid) }
-        .take(2).map(_._1).toSet
-      val asgUdf = udf((e: Array[Float]) => nearest(e))
-      val cosUdf = udf((e: Array[Float]) => dot(e, qe) / (nrm(e) * nrm(qe)))
-      spark.table("cemb")
-        .where(col("vec_id") =!= 0)
-        .withColumn("cid", asgUdf(col("embedding")))
-        .where(col("cid").isin(probes.toSeq: _*))
-        .select(col("vec_id"), round(cosUdf(col("embedding")), 4).as("cos"))
-        .orderBy(desc("cos"), asc("vec_id"))
-        .limit(5)
+        .as[(Int, Array[Float])].collect()
+      annIvf(spark.table("cemb"), cents, nprobe = 2)
     }),
 
     // --- biblio enrichment join + DOI TTL split (§2.1/§2.6), against the

@@ -31,12 +31,11 @@ case class GlobalStats(nDocs: Long, totalTokens: Long, avgdl: Double,
                          * shard hash function addresses existing dirs) */
                        nDocShards: Int,
                        /** resolved chunk-bucket count the chunk table was
-                         * written with (0 = table not cbucket-partitioned).
-                         * Always a multiple of nDocShards, so `shard =
-                         * cbucket % nDocShards`: the incremental exchange
-                         * slice and the query-time candidate fetch both
-                         * prune cbucket DIRECTORIES instead of scanning
-                         * corpus-proportional rows. */
+                         * written with. Always a multiple of nDocShards,
+                         * so `shard = cbucket % nDocShards`: the
+                         * incremental exchange slice and the query-time
+                         * candidate fetch both prune cbucket DIRECTORIES
+                         * instead of scanning corpus-proportional rows. */
                        nChunkBuckets: Int,
                        /** minimum avgdl any LIVE block was built with. An
                          * incremental update re-fits avgdl but leaves
@@ -48,11 +47,6 @@ case class GlobalStats(nDocs: Long, totalTokens: Long, avgdl: Double,
                          * only gate pruning). Full builds reset this to
                          * avgdl. */
                        minBlockAvgdl: Double,
-                       /** posting-block byte layout every block of this
-                         * index was written with ("vbyte" | "for"); in
-                         * configHash, so an incremental update can never
-                         * mix layouts within one blocks table */
-                       postingCodec: String,
                        configHash: String, snapshotId: String)
 
 case class BuildConfig(
@@ -90,22 +84,10 @@ case class BuildConfig(
       * a layout change invalidates the partial-overwrite contract.
       */
     nUrlBuckets: Int = 0,
-    /** posting-block compression ("vbyte" | "for"). FOR bit-packs each
-      * block's gaps/tfs/dls at one shared width — smaller blocks and a
-      * branch-free decode loop on the WAND serving hot path (BENCH.md
-      * round-5 A/B). Layout contract: part of configHash, so switching
-      * codecs forces a full rebuild instead of an incremental update
-      * writing mixed-layout shards.
-      */
-    postingCodec: String = Codec.Vbyte,
     shufflePartitions: Int = 32) {
-  require(Codec.Codecs(postingCodec), s"unknown postingCodec: $postingCodec")
   def configHash: String =
     Analyzer.md5Hex(
-      s"$k1|$b|$epsilon|$nTermBuckets|$nDocShards|$blockSize|$nUrlBuckets|$nChunkBuckets" +
-        // pre-r5 hash compat: the default codec keeps the r4 hash string,
-        // so existing vbyte indexes stay incrementally updatable
-        (if (postingCodec == Codec.Vbyte) "" else s"|$postingCodec"))
+      s"$k1|$b|$epsilon|$nTermBuckets|$nDocShards|$blockSize|$nUrlBuckets|$nChunkBuckets")
 
   def resolveDocShards(nDocs: Long): Int =
     if (nDocShards > 0) nDocShards
@@ -255,36 +237,27 @@ object IndexBuilder {
 
   /** Chunk-table writer shared by the full and incremental paths.
     * Partition columns: `ubucket` (url hash — the unit of incremental
-    * overwrite) and/or `cbucket` (chunkId hash — the unit of candidate-
-    * fetch pruning), both optional. The frame is clustered on the
-    * partition columns first (an unclustered partitionBy write opens
-    * tasks × dirs parquet writers). `dynamic` = overwrite only the
-    * partitions present in the frame (the incremental contract).
+    * overwrite; only with `cfg.nUrlBuckets > 0`) and `cbucket` (chunkId
+    * hash — the unit of candidate-fetch pruning; always, `nCb >= 1`). The
+    * frame is clustered on the partition columns first (an unclustered
+    * partitionBy write opens tasks × dirs parquet writers). `dynamic` =
+    * overwrite only the partitions present in the frame (the incremental
+    * contract).
     */
   private def writeChunksTable(chunksDF: DataFrame, cfg: BuildConfig, nCb: Int,
                                out: IndexPaths, dynamic: Boolean): Unit = {
-    var df = chunksDF
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (cfg.nUrlBuckets > 0) {
-      df = df.withColumn("ubucket",
+    val urlBucketed = cfg.nUrlBuckets > 0
+    val df = (if (urlBucketed) chunksDF.withColumn("ubucket",
         pmod(xxhash64(col("source")), lit(cfg.nUrlBuckets)).cast("int"))
-      parts += "ubucket"
-    }
-    if (nCb > 0) {
-      df = df.withColumn("cbucket",
-        pmod(xxhash64(col("chunkId")), lit(nCb)).cast("int"))
-      parts += "cbucket"
-    }
-    if (parts.isEmpty) df.write.mode(SaveMode.Overwrite).parquet(out.chunks)
-    else {
-      val nDirs = math.max(cfg.nUrlBuckets, 1) * math.max(nCb, 1)
-      // clustered + salted write (shared helper; the seed matters here —
-      // cbucket IS pmod(xxhash64(chunkId), nCb), so an unseeded chunkId
-      // salt would be functionally dependent on it and collapse the
-      // commit back to nDirs writer tasks)
-      TableIO.saltedPartitionWrite(df, parts.toSeq, nDirs, col("chunkId"),
-        cfg.shufflePartitions, out.chunks, dynamic)
-    }
+      else chunksDF)
+      .withColumn("cbucket", pmod(xxhash64(col("chunkId")), lit(nCb)).cast("int"))
+    val parts = (if (urlBucketed) Seq("ubucket") else Nil) :+ "cbucket"
+    // clustered + salted write (shared helper; the seed matters here —
+    // cbucket IS pmod(xxhash64(chunkId), nCb), so an unseeded chunkId
+    // salt would be functionally dependent on it and collapse the
+    // commit back to nDirs writer tasks)
+    TableIO.saltedPartitionWrite(df, parts, math.max(cfg.nUrlBuckets, 1) * nCb,
+      col("chunkId"), cfg.shufflePartitions, out.chunks, dynamic)
   }
 
   /** Content signature of a chunk for change detection: text AND meta
@@ -333,7 +306,6 @@ object IndexBuilder {
       : Dataset[BlockRow] = {
     import spark.implicits._
     val k1 = cfg.k1; val b = cfg.b; val blockSize = cfg.blockSize
-    val codec = cfg.postingCodec
     // Shuffle the NARROWEST possible posting row (guide §2.3): bucket and
     // shard are pure hash functions of term/chunkId, so they ride along as
     // repartition/sort EXPRESSIONS instead of materialized columns, and
@@ -369,7 +341,7 @@ object IndexBuilder {
       var nBytes = 0L
       def flush(): Unit = if (curTerm != null && ids.nonEmpty) {
         val bs = Codec.buildBlocks(ids.toArray, tfs.toArray, dls.toArray,
-          norms.toArray, blockSize, codec)
+          norms.toArray, blockSize)
         bs.zipWithIndex.foreach { case (blk, i) =>
           nBytes += blk.docs.length + blk.tfs.length + blk.dls.length
           out += BlockRow(curBucket, curShard, curTerm, i, blk.n, blk.docs,
@@ -511,8 +483,11 @@ object IndexBuilder {
     // single box this overlaps the commit I/O with the stats shuffle CPU,
     // and on a cluster the two jobs simply share executors. The (bucket,
     // shard) physical partitioning is what makes the incremental path's
-    // shard-grain overwrite possible (and the exchange already clusters on
-    // exactly those columns, so each task writes whole directories).
+    // shard-grain overwrite possible. The exchange hash-partitions on
+    // (bucket, shard), so each group's rows sit in one task, but
+    // assembleBlocks emits them term-major, not clustered on (bucket,
+    // shard): the partitioned writer sorts each task's rows by the
+    // partition columns before it writes.
     blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cleanups += (() => blocks.unpersist())
     val blocksWrite = scala.concurrent.Future {
@@ -547,7 +522,7 @@ object IndexBuilder {
     val snapshotId = Analyzer.md5Hex(s"$nDocs|$totalTokens|${cfg.configHash}")
     val stats = GlobalStats(nDocs, totalTokens, avgdl, vocabSize, avgRawIdf, eps,
       maxStaticBonus, cfg.k1, cfg.b, cfg.nTermBuckets, nShards, nCb, avgdl,
-      cfg.postingCodec, cfg.configHash, snapshotId)
+      cfg.configHash, snapshotId)
     Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(out.globalStats)
     TableIO.writeManifest(out.manifest, Map(
       "snapshot_id" -> snapshotId, "n_docs" -> nDocs.toString,
@@ -569,23 +544,26 @@ object IndexBuilder {
     }
   }
 
+  /** The index's GlobalStats. An index loads exactly or not at all: stats
+    * written before the chunk table was cbucket-partitioned (no
+    * `nChunkBuckets`), or recording a posting codec other than the VByte
+    * layout every block now has, fail with a rebuild message instead of
+    * serving or updating an index this code cannot read.
+    */
   def loadStats(spark: SparkSession, out: IndexPaths): GlobalStats = {
     import spark.implicits._
-    // read-compat with pre-r4 indexes that lack the shard/avgdl lineage
-    // columns: default them instead of failing the whole backend —
-    // nDocShards=0 just disables the incremental path (full rebuild on
-    // next update) and minBlockAvgdl=0 keeps WAND's bound scale at 1
-    // (valid: such an index was fully built under its current avgdl).
-    var df = spark.read.parquet(out.globalStats)
-    if (!df.columns.contains("nDocShards"))
-      df = df.withColumn("nDocShards", lit(0))
-    if (!df.columns.contains("nChunkBuckets"))
-      df = df.withColumn("nChunkBuckets", lit(0))
-    if (!df.columns.contains("minBlockAvgdl"))
-      df = df.withColumn("minBlockAvgdl", lit(0.0))
-    if (!df.columns.contains("postingCodec"))
-      df = df.withColumn("postingCodec", lit(Codec.Vbyte))
-    df.as[GlobalStats].head()
+    val df = spark.read.parquet(out.globalStats)
+    // indexes written while the codec was selectable record it; only the
+    // VByte layout remains readable
+    val vbyte =
+      if (df.columns.contains("postingCodec")) col("postingCodec") === "vbyte"
+      else lit(true)
+    val stats =
+      if (df.columns.contains("nChunkBuckets")) df.where(vbyte).as[GlobalStats].head(1)
+      else Array.empty[GlobalStats]
+    require(stats.nonEmpty, s"${out.globalStats}: unsupported index layout " +
+      "(no nChunkBuckets, or a posting codec other than vbyte); rebuild the index")
+    stats.head
   }
 
   /** Incremental index update: rebuild posting blocks ONLY for the doc
@@ -622,7 +600,6 @@ object IndexBuilder {
                        affectedShards: Seq[Int],
                        affectedUBuckets: Seq[Int] = Nil): GlobalStats = {
     import spark.implicits._
-    require(prev.nDocShards > 0, "previous build did not record nDocShards")
     require(cfg.configHash == prev.configHash,
       "config changed — incremental update invalid, run a full build")
     val t0 = System.nanoTime()
@@ -690,18 +667,14 @@ object IndexBuilder {
       // fallback, whose input already paid a full dedup shuffle) the
       // shard is derived by hashing chunkId — a row filter, not pruning.
       // The bucket count is the one the existing table was WRITTEN with
-      // (0 = pre-cbucket index: keep the ubucket-only layout; mixing
-      // layouts under dynamic overwrite would corrupt the table).
+      // (mixing layouts under dynamic overwrite would corrupt the table).
       val nCb = prev.nChunkBuckets
-      require(nCb == 0 || cfg.resolveChunkBuckets(nShards) == nCb,
+      require(cfg.resolveChunkBuckets(nShards) == nCb,
         s"chunk-bucket layout drift: table has $nCb, config resolves " +
           s"${cfg.resolveChunkBuckets(nShards)}")
       val shardSet = affectedShards.toSet
       val sliced =
-        // nCb > 0 guard: a table CARRYING cbucket but whose stats predate
-        // the recorded count (nCb == 0) must take the hash-filter path —
-        // an empty isin list would silently drop every kept chunk
-        if (nCb > 0 && chunks.columns.contains("cbucket")) {
+        if (chunks.columns.contains("cbucket")) {
           val affectedCb = (0 until nCb).filter(c => shardSet(c % nShards))
           chunks.filter(col("cbucket").isin(affectedCb: _*))
         } else {
@@ -797,24 +770,19 @@ object IndexBuilder {
       // avgdl, keep the untouched shards' record, and re-derive
       // minBlockAvgdl as the min over LIVE shards — so WAND's bound scale
       // recovers once stale shards get rewritten, instead of ratcheting
-      // down forever. Missing side table (pre-r5 index): conservative
-      // ratchet, still valid.
-      val minBlockAvgdl = scala.util.Try {
-        val prevShardAvgdl = spark.read.parquet(out.shardStats)
-          .select("shard", "avgdl").as[(Int, Double)].collect().toMap
-        require(prevShardAvgdl.keySet == (0 until nShards).toSet,
-          "shard_stats does not cover every shard")
-        val updated = (0 until nShards).map(s =>
-          (s, if (shardSet(s)) avgdl else prevShardAvgdl(s)))
-        spark.createDataset(updated).toDF("shard", "avgdl")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(out.shardStats)
-        updated.iterator.map(_._2).min
-      }.getOrElse(
-        math.min(if (prev.minBlockAvgdl > 0) prev.minBlockAvgdl else prev.avgdl,
-          avgdl))
+      // down forever.
+      val prevShardAvgdl = spark.read.parquet(out.shardStats)
+        .select("shard", "avgdl").as[(Int, Double)].collect().toMap
+      require(prevShardAvgdl.keySet == (0 until nShards).toSet,
+        "shard_stats does not cover every shard; rebuild the index")
+      val updated = (0 until nShards).map(s =>
+        (s, if (shardSet(s)) avgdl else prevShardAvgdl(s)))
+      spark.createDataset(updated).toDF("shard", "avgdl")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(out.shardStats)
+      val minBlockAvgdl = updated.iterator.map(_._2).min
       val stats = GlobalStats(nDocs, totalTokens, avgdl, vocabSize, avgRawIdf,
         eps, maxStaticBonus, cfg.k1, cfg.b, cfg.nTermBuckets, nShards, nCb,
-        minBlockAvgdl, cfg.postingCodec, cfg.configHash, snapshotId)
+        minBlockAvgdl, cfg.configHash, snapshotId)
       Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(out.globalStats)
       TableIO.writeManifest(out.manifest, Map(
         "snapshot_id" -> snapshotId, "parent_snapshot" -> prev.snapshotId,

@@ -282,7 +282,7 @@ object ResumableBuild {
     val updateInterrupted = manifest0.contains("pending_update")
     val effBuild = withUrlBuckets(build, resume)
     val prev = scala.util.Try(IndexBuilder.loadStats(spark, out)).toOption
-      .filter(p => !interrupted && p.nDocShards > 0 &&
+      .filter(p => !interrupted &&
         p.configHash == effBuild.configHash && fsExists(spark, out.chunks))
     // change-proportional-dedup preconditions, captured EAGERLY before the
     // chunk phase overwrites the changed buckets: their OLD dedup hashes
@@ -383,12 +383,10 @@ object ResumableBuild {
     // winners carry BOTH chunk-table partition columns so the assembled
     // merged frame matches the table layout (ubucket = overwrite grain,
     // cbucket = the shard-aligned exchange-slice pruning grain)
-    val winners0 = ChunkerJob.dedup(rawCand).toDF()
+    val winners = ChunkerJob.dedup(rawCand).toDF()
       .withColumn("ubucket", pmod(xxhash64(col("source")), lit(nB)).cast("int"))
-    val winners = (if (p.nChunkBuckets > 0)
-        winners0.withColumn("cbucket",
-          pmod(xxhash64(col("chunkId")), lit(p.nChunkBuckets)).cast("int"))
-      else winners0)
+      .withColumn("cbucket",
+        pmod(xxhash64(col("chunkId")), lit(p.nChunkBuckets)).cast("int"))
       .localCheckpoint(true)
 
     // previous kept rows of those groups get replaced wholesale; the sig
@@ -418,10 +416,8 @@ object ResumableBuild {
       // and `cbucket` so its affected-SHARD exchange slice does too
       // (shard = cbucket % nShards) — the kept side is never scanned
       // corpus-proportionally on either axis
-      val keptTable = spark.read.parquet(out.chunks)
-      val partCols = Seq("ubucket") ++
-        (if (keptTable.columns.contains("cbucket")) Seq("cbucket") else Nil)
-      val keptSide = keptTable
+      val partCols = Seq("ubucket", "cbucket")
+      val keptSide = spark.read.parquet(out.chunks)
         .select(core.map(col) ++
           partCols.map(c => col(c).cast("int").as(c)): _*)
         .join(replaced.select("chunkId"), Seq("chunkId"), "left_anti")

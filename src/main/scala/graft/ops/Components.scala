@@ -91,23 +91,26 @@ object Components {
         f"[components] $label: ${(System.nanoTime() - t0) / 1e9}%.3fs")
       a
     }
-    var prevSum = dt("init")(lblSum(labels))
-    var changed = true
-    var round = 0
     // inside the loop both join sides are already hash-partitioned on the
     // join key with equal partition counts, so the cheapest per-round plan
     // is a zero-exchange shuffled-hash join in ONE job; AQE would split
     // every round into per-exchange query stages and the broadcast planner
     // would add a per-round driver collect+broadcast of the label frame —
-    // pure fixed cost at any scale. Scoped + restored around the loop.
+    // pure fixed cost at any scale. Scoped around the loop and restored
+    // exactly: a key that was unset before is unset again (getAll, because
+    // getOption answers an unset key with its default).
     val conf = spark.conf
-    val savedAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val savedBc = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val savedPrefSmj = conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try {
+    val loopConf = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.join.preferSortMergeJoin" -> "false")
+    val setBefore = conf.getAll
+    // the returned frame reads a checkpoint of the final labels (the last
+    // round's lblSum materialized them), so no loop cache outlives the call
+    val finalLabels = try {
+      var prevSum = dt("init")(lblSum(labels))
+      var changed = true
+      var round = 0
+      loopConf.foreach { case (k, v) => conf.set(k, v) }
       while (changed && round <= maxRounds) {
         round += 1
         val prop = sym.join(labels, col("src") === col("id"))
@@ -134,21 +137,24 @@ object Components {
         // maxRounds+1 label frames pile up in the block manager
         prevLabels.unpersist()
       }
+      // non-convergence means the graph's diameter exceeded maxRounds —
+      // refuse to return a wrong labeling
+      require(!changed,
+        s"component diameter exceeds maxRounds=$maxRounds (pathological graph?)")
+      labels.localCheckpoint(true)
     } finally {
-      conf.set("spark.sql.adaptive.enabled", savedAqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
-      conf.set("spark.sql.join.preferSortMergeJoin", savedPrefSmj)
+      loopConf.foreach { case (k, _) =>
+        setBefore.get(k).fold(conf.unset(k))(conf.set(k, _))
+      }
+      labels.unpersist()
+      sym.unpersist()
     }
-    // non-convergence means the graph's diameter exceeded maxRounds —
-    // refuse to return a wrong labeling
-    require(!changed,
-      s"component diameter exceeds maxRounds=$maxRounds (pathological graph?)")
     // one left join instead of round-5's anti-join + union: a vertex with
     // no propagated label is its own component (identical output under the
     // documented contract that `vertices` covers every vertex)
     vertices.select(col("id").cast("long").as("id"))
       .distinct()
-      .join(labels, Seq("id"), "left")
+      .join(finalLabels, Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.ChunkRow
-import graft.index.{GlobalStats, IndexBuilder, IndexPaths}
+import graft.index.{Codec, GlobalStats, IndexBuilder, IndexPaths}
 
 /** Distributed SearchBackend over the persisted index tables.
   *
@@ -75,7 +75,6 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     val buckets = qRows.map(r => IndexBuilder.termBucket(r._1, nTermBuckets)).distinct
     val q = qRows.toDF("term", "pos", "idf")
     val k1 = stats.k1; val b = stats.b; val avgdl = stats.avgdl
-    val codec = stats.postingCodec
     // Per-position partial sums keep the whole aggregation inside
     // whole-stage codegen; adding the per-position columns left-to-right
     // reproduces the reference's query-token-order float summation exactly
@@ -96,9 +95,9 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
       .select("term", "n", "docs", "tfs", "dls")
       .as[(String, Int, Array[Byte], Array[Byte], Array[Byte])]
       .flatMap { case (term, n, docs, tfs, dls) =>
-        val ids = graft.index.Codec.decode(codec, docs, n, deltas = true)
-        val f = graft.index.Codec.decode(codec, tfs, n, deltas = false)
-        val d = graft.index.Codec.decode(codec, dls, n, deltas = false)
+        val ids = Codec.vbyteDecode(docs, n, deltas = true)
+        val f = Codec.vbyteDecode(tfs, n, deltas = false)
+        val d = Codec.vbyteDecode(dls, n, deltas = false)
         (0 until n).iterator.map(i => (term, ids(i), f(i), d(i)))
       }
       .toDF("term", "chunkId", "tf", "dl")
@@ -264,31 +263,16 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     out.foreach { case (c, s) => into(c.chunkId) = (c, s) }
   }
 
-  // chunk-bucket partition pruning for candidate fetches. The bucket COUNT
-  // comes from the recorded build stats — deriving it from max(cbucket)+1
-  // is wrong whenever the highest buckets happen to be empty (the modulus
-  // would shrink and candidate fetches would prune the WRONG partitions);
-  // the max+1 probe survives only as back-compat for pre-r5 indexes that
-  // predate the stats column.
-  private val chunkBucketed = chunksRawDF.columns.contains("cbucket")
-  private val nChunkBuckets =
-    if (!chunkBucketed) 0
-    else if (stats.nChunkBuckets > 0) stats.nChunkBuckets
-    else chunksRawDF.select(max(col("cbucket"))).head().getInt(0) + 1
-
   /** Candidate rows + their precomputed static bonuses (pattern, meta, gib)
-    * from the cached chunk table; with a bucketed chunk table the scan is
-    * pruned to the candidates' partitions (the corpus-sublinear path).
+    * from the cached chunk table; the scan is pruned to the candidates'
+    * cbucket partitions (the corpus-sublinear path). The bucket COUNT is
+    * the one recorded in the build stats.
     */
   private def fetchChunks(ids: Seq[Long])
       : IndexedSeq[(ChunkRow, (Double, Double, Double))] = {
-    val base =
-      if (chunkBucketed) {
-        val buckets = ids.map(IndexBuilder.chunkBucket(_, nChunkBuckets)).distinct
-        chunksRawDF.filter(col("cbucket").isin(buckets: _*))
-      } else chunksRawDF
-    base
-      .filter(col("chunkId").isin(ids: _*))
+    val buckets = ids.map(IndexBuilder.chunkBucket(_, stats.nChunkBuckets)).distinct
+    chunksRawDF
+      .filter(col("cbucket").isin(buckets: _*) && col("chunkId").isin(ids: _*))
       .select(col("chunkId"), col("docId"), col("source"), col("page"),
         col("chunkIdx"), col("text"), col("meta"),
         col("pattern_b"), col("meta_b"), col("gib"))

@@ -24,7 +24,7 @@ object Wand {
 
   private final class Cursor(val weight: Double, blocks: IndexedSeq[BlockRow],
                              k1: Double, b: Double, avgdl: Double,
-                             boundScale: Double, codec: String) {
+                             boundScale: Double) {
     // A term with negative weight (the BM25Okapi negative-eps floor on a
     // stopword-dense corpus) can only lower a doc's score; its valid upper
     // bound for pivot pruning is 0, not weight*maxTfNorm. boundScale
@@ -45,11 +45,9 @@ object Wand {
     private def loadBlock(): Unit = {
       if (bi < blocks.length) {
         val blk = blocks(bi)
-        val cb = Codec.Block(blk.docs, blk.tfs, blk.dls, blk.n, blk.maxTfNorm,
-          blk.firstDoc, blk.lastDoc)
-        docs = Codec.decodeBlockDocs(cb, codec)
-        tfs = Codec.decodeBlockTfs(cb, codec)
-        dls = Codec.decodeBlockDls(cb, codec)
+        docs = Codec.vbyteDecode(blk.docs, blk.n, deltas = true)
+        tfs = Codec.vbyteDecode(blk.tfs, blk.n, deltas = false)
+        dls = Codec.vbyteDecode(blk.dls, blk.n, deltas = false)
         di = 0
       } else { docs = null }
     }
@@ -90,12 +88,11 @@ object Wand {
   def wandShard(blocksByTerm: Map[String, IndexedSeq[BlockRow]],
                 termOrder: IndexedSeq[String], termWeights: Map[String, Double],
                 k: Int, k1: Double, b: Double, avgdl: Double,
-                boundScale: Double = 1.0,
-                codec: String): Seq[(Long, Double)] = {
+                boundScale: Double = 1.0): Seq[(Long, Double)] = {
     val cursors: Array[Cursor] = termOrder.iterator
       .filter(t => blocksByTerm.contains(t) && termWeights.getOrElse(t, 0.0) != 0.0)
       .map(t => new Cursor(termWeights(t),
-        blocksByTerm(t).sortBy(_.blockId), k1, b, avgdl, boundScale, codec))
+        blocksByTerm(t).sortBy(_.blockId), k1, b, avgdl, boundScale))
       .filter(!_.exhausted)
       .toArray
     if (cursors.isEmpty || k <= 0) return Nil
@@ -184,7 +181,6 @@ object Wand {
     // under the old (possibly smaller) avgdl — scale bounds to stay valid
     val boundScale =
       if (stats.minBlockAvgdl > 0) math.max(1.0, avgdl / stats.minBlockAvgdl) else 1.0
-    val codec = stats.postingCodec
 
     val blocks = spark.read.parquet(paths.blocks)
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(liveTerms: _*))
@@ -202,7 +198,7 @@ object Wand {
           scala.collection.mutable.ArrayBuffer.empty[BlockRow]) += r
       }
       wandShard(byTerm.view.mapValues(_.toIndexedSeq).toMap,
-        termOrder, weights, k, k1, b, avgdl, boundScale, codec)
+        termOrder, weights, k, k1, b, avgdl, boundScale)
     }.collect()
 
     perShard.iterator.flatten.toSeq

@@ -1,10 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.index.Codec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
+import graft.index.{BuildConfig, Codec, GlobalStats, IndexBuilder, IndexPaths}
 
 /** Property-style roundtrip tests with a fixed seed (scalacheck's
-  * scalatest bridge is not in the offline cache, so plain seeded loops).
+  * scalatest bridge is not in the offline cache, so plain seeded loops),
+  * plus the on-disk layout contract: the default configHash and the
+  * loadStats guard against layouts this code cannot read.
   */
 class CodecSpec extends AnyFunSuite {
   private val rng = new scala.util.Random(42)
@@ -35,10 +39,10 @@ class CodecSpec extends AnyFunSuite {
       val tfs = Array.tabulate(n)(i => (i % 7 + 1).toLong)
       val dls = Array.tabulate(n)(i => (i % 90 + 10).toLong)
       val norms = Array.tabulate(n)(i => tfs(i).toDouble / (tfs(i) + dls(i)))
-      val blocks = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64, codec = Codec.Vbyte)
-      assert(blocks.flatMap(Codec.decodeBlockDocs(_, Codec.Vbyte)) == ids.toSeq)
-      assert(blocks.flatMap(Codec.decodeBlockTfs(_, Codec.Vbyte)) == tfs.toSeq)
-      assert(blocks.flatMap(Codec.decodeBlockDls(_, Codec.Vbyte)) == dls.toSeq)
+      val blocks = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64)
+      assert(blocks.flatMap(Codec.decodeBlockDocs) == ids.toSeq)
+      assert(blocks.flatMap(Codec.decodeBlockTfs) == tfs.toSeq)
+      assert(blocks.flatMap(Codec.decodeBlockDls) == dls.toSeq)
       var off = 0
       for (b <- blocks) {
         val mx = norms.slice(off, off + b.n).max
@@ -54,88 +58,38 @@ class CodecSpec extends AnyFunSuite {
     val tfs = Array.fill(10000)(2L)
     val dls = Array.fill(10000)(60L)
     val norms = Array.fill(10000)(0.5)
-    val blocks = Codec.buildBlocks(ids, tfs, dls, norms, codec = Codec.Vbyte)
+    val blocks = Codec.buildBlocks(ids, tfs, dls, norms)
     val bytes = blocks.map(b => b.docs.length + b.tfs.length + b.dls.length).sum
     assert(bytes < 10000 * 4, s"expected <4B/posting, got ${bytes / 10000.0}")
   }
 
-  test("FOR roundtrip: arbitrary non-negative values, all widths") {
-    for (trial <- 1 to 300) {
-      val n = rng.nextInt(300)
-      // vary the magnitude so every bit width 0..63 gets exercised
-      val bits = trial % 64
-      val arr = Array.fill(n)(
-        if (bits == 0) 0L else rng.nextLong() >>> (64 - bits))
-      val enc = Codec.forEncode(arr, deltas = false)
-      assert(Codec.forDecode(enc, n, deltas = false).toSeq == arr.toSeq,
-        s"width~$bits n=$n")
-    }
+  test("default configHash unchanged from r4 (vbyte indexes stay updatable)") {
+    // an on-disk index's recorded hash must keep matching the default
+    // config, or every existing index loses its incremental path
+    val r4Style = graft.analysis.Analyzer.md5Hex("1.4|0.75|0.25|32|0|128|0|0")
+    assert(BuildConfig().configHash == r4Style)
   }
 
-  test("FOR roundtrip: full-range unsigned values (width 64)") {
-    for (_ <- 1 to 100) {
-      val n = 1 + rng.nextInt(300)
-      val arr = Array.fill(n)(rng.nextLong()) // any bit pattern
-      val enc = Codec.forEncode(arr, deltas = false)
-      assert(Codec.forDecode(enc, n, deltas = false).toSeq == arr.toSeq)
+  test("loadStats rejects FOR-coded and pre-cbucket stats with a rebuild message") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val stats = GlobalStats(nDocs = 10, totalTokens = 100, avgdl = 10.0,
+      vocabSize = 5, avgRawIdf = 1.0, eps = 0.25, maxStaticBonus = 0.0,
+      k1 = 1.4, b = 0.75, nTermBuckets = 8, nDocShards = 4, nChunkBuckets = 4,
+      minBlockAvgdl = 10.0, configHash = "h", snapshotId = "s")
+    def written(f: DataFrame => DataFrame): IndexPaths = {
+      val p = IndexPaths(java.nio.file.Files.createTempDirectory("graft-stats").toString)
+      f(Seq(stats).toDF()).write.mode("overwrite").parquet(p.globalStats)
+      p
     }
-    // adversarial: min and max unsigned in one frame forces width 64
-    val edge = Array(0L, -1L, Long.MinValue, Long.MaxValue, 1L)
-    // (not sorted — non-delta mode has no monotonicity requirement)
-    val enc = Codec.forEncode(edge, deltas = false)
-    assert(Codec.forDecode(enc, edge.length, deltas = false).toSeq == edge.toSeq)
-  }
-
-  test("FOR delta roundtrip: sorted ids incl. negative first values") {
-    for (_ <- 1 to 200) {
-      val n = rng.nextInt(300)
-      val arr = Array.fill(n)(rng.nextLong()).distinct.sorted
-      val enc = Codec.forEncode(arr, deltas = true)
-      assert(Codec.forDecode(enc, arr.length, deltas = true).toSeq == arr.toSeq)
-    }
-    // constant gaps -> width 0 frame
-    val flat = Array.tabulate(50)(i => 7L * i - 100)
-    val enc0 = Codec.forEncode(flat, deltas = true)
-    assert(Codec.forDecode(enc0, flat.length, deltas = true).toSeq == flat.toSeq)
-    // extreme gap: MinValue then MaxValue (unsigned-wrapping delta)
-    val wide = Array(Long.MinValue, -1L, Long.MaxValue)
-    val enc1 = Codec.forEncode(wide, deltas = true)
-    assert(Codec.forDecode(enc1, wide.length, deltas = true).toSeq == wide.toSeq)
-  }
-
-  test("FOR and VByte decode to identical postings; FOR packs tighter on dense lists") {
-    for (_ <- 1 to 100) {
-      val n = 1 + rng.nextInt(400)
-      val ids = Array.fill(n)(rng.nextLong() % 10000000L).distinct.sorted
-      val vb = Codec.decode(Codec.Vbyte, Codec.encode(Codec.Vbyte, ids, deltas = true),
-        ids.length, deltas = true)
-      val fr = Codec.decode(Codec.For, Codec.encode(Codec.For, ids, deltas = true),
-        ids.length, deltas = true)
-      assert(vb.toSeq == fr.toSeq)
-    }
-    // 128-gap frames of a dense posting list: one shared width beats
-    // per-value vbyte bytes
-    val dense = Array.tabulate(128)(i => 1000000L + i * 37L)
-    val vbBytes = Codec.encode(Codec.Vbyte, dense, deltas = true).length
-    val forBytes = Codec.encode(Codec.For, dense, deltas = true).length
-    assert(forBytes < vbBytes, s"FOR $forBytes >= VByte $vbBytes")
-  }
-
-  test("FOR block build/decode roundtrip matches VByte blocks") {
-    for (_ <- 1 to 50) {
-      val n = 1 + rng.nextInt(500)
-      val scale = 1 + rng.nextInt(1000000)
-      val ids = Array.tabulate(n)(i => i.toLong * scale - 500000L)
-      val tfs = Array.tabulate(n)(i => (i % 7 + 1).toLong)
-      val dls = Array.tabulate(n)(i => (i % 90 + 10).toLong)
-      val norms = Array.tabulate(n)(i => tfs(i).toDouble / (tfs(i) + dls(i)))
-      val fb = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64, codec = Codec.For)
-      assert(fb.flatMap(Codec.decodeBlockDocs(_, Codec.For)) == ids.toSeq)
-      assert(fb.flatMap(Codec.decodeBlockTfs(_, Codec.For)) == tfs.toSeq)
-      assert(fb.flatMap(Codec.decodeBlockDls(_, Codec.For)) == dls.toSeq)
-      val vb = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64, codec = Codec.Vbyte)
-      assert(fb.map(b => (b.n, b.maxTfNorm, b.firstDoc, b.lastDoc)) ==
-        vb.map(b => (b.n, b.maxTfNorm, b.firstDoc, b.lastDoc)))
+    // stats as written today, and as written while the codec was selectable
+    assert(IndexBuilder.loadStats(spark, written(identity)) == stats)
+    assert(IndexBuilder.loadStats(spark,
+      written(_.withColumn("postingCodec", lit("vbyte")))) == stats)
+    for (bad <- Seq(written(_.withColumn("postingCodec", lit("for"))),
+                    written(_.drop("nChunkBuckets")))) {
+      val e = intercept[IllegalArgumentException](IndexBuilder.loadStats(spark, bad))
+      assert(e.getMessage.contains("rebuild the index"))
     }
   }
 }

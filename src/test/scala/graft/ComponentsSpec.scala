@@ -77,4 +77,26 @@ class ComponentsSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("diameter"))
   }
+
+  test("minLabel leaves no cached frame and the session SQL conf as it found it") {
+    import spark.implicits._
+    // one loop key set before the call (its value must come back) and one
+    // unset (it must stay unset, not be pinned to its default)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    val conf0 = spark.conf.getAll
+    // CacheManager.numCachedEntries is Spark-internal in Scala, public in
+    // bytecode
+    val cache = spark.sharedState.cacheManager
+    def cachedEntries: Int =
+      cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val cached0 = cachedEntries
+    val edges = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("x", "y")
+    val got = Components.minLabel(edges, (0L until 8L).toDF("id"))
+      .as[(Long, Long)].collect().toMap
+    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 4L,
+      5L -> 5L, 6L -> 5L, 7L -> 7L))
+    assert(cachedEntries == cached0, "minLabel left a cached frame")
+    assert(spark.conf.getAll == conf0)
+  }
 }
