@@ -26,17 +26,22 @@ object SparkEntry {
     * before a single row moved. Re-registering an identical view is pure
     * metadata churn, so both are memoized per (session, path); every query
     * still scans the parquet itself (lazy plans — no data or results are
-    * cached). WeakHashMap keyed on the session: stopped sessions drop out.
+    * cached). A single (session, registry) slot, as for
+    * SparkEntryExtra.searchMemo: the registry's DataFrames hold their
+    * session, so a map keyed by session would pin every session that ever
+    * ran a catalog query. Another session asking replaces the slot, which
+    * releases the previous session.
     */
-  private val tableReg = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef]]()
+  private val tableReg = new java.util.concurrent.atomic.AtomicReference[
+    (SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef])]()
   private def regFor(spark: SparkSession) = tableReg.synchronized {
-    var m = tableReg.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-      tableReg.put(spark, m)
+    val cur = tableReg.get()
+    if (cur != null && (cur._1 eq spark)) cur._2
+    else {
+      val m = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+      tableReg.set((spark, m))
+      m
     }
-    m
   }
 
   /** Lazy DataFrame over a parquet path, one schema read per session. */
@@ -559,6 +564,8 @@ object SparkEntry {
     // §1.2 step 2 / the q_embed_neardup precedent): identical float-op
     // order (index-order double sums, sqrt, nrm*qn before the divide), so
     // cosines are bit-identical to the former aggregate/zip_with chain.
+    // try_divide: a zero-norm vector's cosine is NULL, as DuckDB's x / 0
+    // is, and ranks last; a plain divide raises DIVIDE_BY_ZERO under ANSI.
     "q_embed_topk" -> ((spark: SparkSession, dir: String) => {
       views(spark, dir, "embeddings")
       SparkEntryExtra.registerVecUdfs(spark)
@@ -569,7 +576,7 @@ object SparkEntry {
             graft_vnorm(e.embedding) AS nrm,
             graft_vnorm(q.qe) AS qn
             FROM embeddings e CROSS JOIN q WHERE e.vec_id <> 0)
-          SELECT vec_id, round(dot / (nrm * qn), 4) AS cos
+          SELECT vec_id, round(try_divide(dot, nrm * qn), 4) AS cos
           FROM dots ORDER BY cos DESC, vec_id LIMIT 10""")
     })
   )

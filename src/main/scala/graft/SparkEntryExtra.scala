@@ -460,10 +460,6 @@ private[graft] object SparkEntryExtra {
     }),
 
     // --- embedding near-duplicates (cosine >= 0.45, capped id range).
-    //     Tight-loop UDF with the identical float-op order as the oracle's
-    //     list lambdas (index-order sums, nrm_a*nrm_b before the divide) —
-    //     the interpreted per-pair lambda aggregation was 6.5s at sf0.1.
-    // --- embedding near-duplicates (cosine >= 0.45, capped id range).
     //     The vec_id < 1000 cap (unchanged since round 4 — the documented
     //     honest cap; production near-dup is LSH/IVF) bounds the vector
     //     block, so broadcast it once and run the O(n^2/2) pair scan as a
@@ -471,7 +467,10 @@ private[graft] object SparkEntryExtra {
     //     BroadcastNestedLoopJoin with one Scala-UDF dispatch per pair.
     //     Float-op order is identical to the oracle's list lambdas:
     //     index-order double sums, nrm_a * nrm_b before the divide,
-    //     threshold on the unrounded cosine, round(4) after.
+    //     threshold on the unrounded cosine, round(4) after. The oracle's
+    //     NULL/NaN rules hold too: a zero denominator makes the cosine
+    //     NULL, so the pair is dropped; a NaN cosine (NaN component)
+    //     passes `>= 0.45`, since NaN sorts greatest, so the pair is kept.
     "q_embed_neardup" -> ((spark: SparkSession, dir: String) => {
       import spark.implicits._
       views(spark, dir, "embeddings")
@@ -505,8 +504,10 @@ private[graft] object SparkEntryExtra {
               var dot = 0.0
               var k = 0
               while (k < a.length) { dot += a(k).toDouble * b(k).toDouble; k += 1 }
-              val cos = dot / (nr(i) * nr(j))
-              if (cos >= 0.45) Iterator.single((id(i), id(j), cos))
+              val den = nr(i) * nr(j)
+              val cos = dot / den
+              if (den != 0.0 && (cos >= 0.45 || cos.isNaN))
+                Iterator.single((id(i), id(j), cos))
               else Iterator.empty
             }
           }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import graft.corpus.{ChunkMeta, ChunkRow}
 import graft.index.{BuildConfig, IndexBuilder, IndexPaths}
@@ -25,8 +26,12 @@ object DocIndex {
           ChunkRow(id, IndexBuilder.stableId(source), source, 1, id.toInt, text,
             ChunkMeta())
         }
-      val paths = IndexPaths(
-        java.nio.file.Files.createTempDirectory("graft-docindex").toString)
+      val root = java.nio.file.Files.createTempDirectory("graft-docindex")
+      // deleted recursively when Hadoop closes its cached FileSystems at
+      // JVM exit
+      FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+        .deleteOnExit(new Path(root.toUri))
+      val paths = IndexPaths(root.toString)
       IndexBuilder.build(spark, docs, paths,
         BuildConfig(nTermBuckets = TermBuckets, nDocShards = 0,
           shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "8").toInt))

@@ -3,13 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
-/** The ANN catalog queries on degenerate inputs behave like their SQL form
-  * instead of throwing. The reference forms below are the oracle SQL in
+/** The cosine catalog queries (ANN and embedding) on degenerate inputs
+  * behave like their SQL form instead of throwing. The reference forms below are the oracle SQL in
   * Spark's dialect: the vec_id = 0 query row is CROSS JOINed in, and
   * `try_divide` gives DuckDB's NULL for a zero-norm divisor. So a missing
   * query vector gives an empty result, a zero-norm vector's cosine is NULL
   * and ranks last, and a NaN-component vector's cosine is NaN and ranks
-  * first (`ORDER BY ... DESC`).
+  * first (`ORDER BY ... DESC`) and passes a `>=` threshold.
   */
 class AnnDegenerateSpec extends AnyFunSuite {
 
@@ -39,6 +39,52 @@ class AnnDegenerateSpec extends AnyFunSuite {
   /** Rows as (vec_id, cos text): NaN and NULL compare equal to themselves. */
   private def rows(df: DataFrame): Seq[(Long, String)] =
     df.collect().toSeq.map(r => (r.getLong(0), String.valueOf(r.get(1))))
+
+  private val embedTopkSql =
+    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+        dots AS (SELECT e.vec_id, try_divide(graft_vdot(e.embedding, q.qe),
+             graft_vnorm(e.embedding) * graft_vnorm(q.qe)) AS cos
+           FROM embeddings e CROSS JOIN q WHERE e.vec_id <> 0)
+        SELECT vec_id, round(cos, 4) AS cos FROM dots
+        ORDER BY cos DESC, vec_id LIMIT 10"""
+
+  test("q_embed_topk: zero-norm vectors rank last instead of dividing by zero") {
+    SparkEntryExtra.registerVecUdfs(spark)
+    val rng = new scala.util.Random(3)
+    for (query <- Seq(randomVec(rng), zero)) {
+      val dir = embeddingsDir(Some(query))
+      val got = rows(SparkEntry.queries("q_embed_topk")(spark, dir))
+      assert(got == rows(spark.sql(embedTopkSql)))
+      // the NaN vector's cosine ranks first; zero-norm ones are NULL and
+      // rank last
+      assert(got.head == ((43L, "NaN")) && got.length == 10)
+      if (query eq zero) assert(got.tail.map(_._1) == (1L to 9L))
+      else assert(got.tail.forall(r => r._2 != "null" && r._1 <= 40L))
+    }
+  }
+
+  private val embedNeardupSql =
+    """WITH e AS (SELECT vec_id, embedding, graft_vnorm(embedding) AS nrm
+             FROM embeddings WHERE vec_id < 1000),
+        p AS (SELECT a.vec_id AS x, b.vec_id AS y, try_divide(
+               graft_vdot(a.embedding, b.embedding), a.nrm * b.nrm) AS cos
+             FROM e a JOIN e b ON a.vec_id < b.vec_id)
+        SELECT x, y, round(cos, 4) AS cos FROM p WHERE cos >= 0.45
+        ORDER BY x, y"""
+
+  test("q_embed_neardup: zero-denominator pairs drop, NaN-cosine pairs stay") {
+    SparkEntryExtra.registerVecUdfs(spark)
+    val dir = embeddingsDir(Some(randomVec(new scala.util.Random(3))))
+    def triples(df: DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), String.valueOf(r.get(2))))
+    val got = triples(SparkEntry.queries("q_embed_neardup")(spark, dir))
+    assert(got == triples(spark.sql(embedNeardupSql)))
+    // every vector pairs with the NaN one (43), the zero-norm ones included
+    assert(got.filter(_._2 == 43L) == (0L to 42L).map(x => (x, 43L, "NaN")))
+    // a zero-norm vector pairs with nothing else
+    val zeroIds = Set(41L, 42L)
+    assert(got.forall(t => t._2 == 43L || !zeroIds(t._1) && !zeroIds(t._2)))
+  }
 
   private def lshSql(nPlanes: Int, masks: Seq[Int]): String =
     s"""WITH sig AS (SELECT vec_id, embedding,

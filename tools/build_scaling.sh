@@ -2,7 +2,7 @@
 # Build-scaling isolation experiment (VERDICT r2 directive #3):
 # is the 4->16-core full-build efficiency gap our shuffle design, or the
 # host's memory/tmpfs floor? Three measurements on identical 20k-page
-# builds (graft.GraftCli query-free "directbuild" path):
+# builds (the query-free graft.GraftCli "directbuild" path):
 #   A) one JVM, local[4]            -> T4      (baseline throughput/core)
 #   B) one JVM, local[16]           -> T16     (in-process scaling)
 #   C) four CONCURRENT JVMs, local[4] each, disjoint spark.local.dirs and
